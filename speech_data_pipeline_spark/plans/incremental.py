@@ -17,6 +17,16 @@ counters. The engine's equivalents:
 At 100 TB the done-set is a Delta/parquet table partitioned like the
 input; the anti-join prunes to key columns and broadcasts when the
 done-set fits (the common incremental case: small delta of new files).
+The anti-join prunes stage work, not the work that built ``inputs``:
+when keys are joined after decode (a scan → decode frame), every file
+is decoded before ``pending`` can drop the done ones, so decode cost
+follows the corpus, not the delta. Pruning decode needs the key join
+on the encoded scan, ahead of decode.
+
+Known limitation: a key is done only once its stage wrote at least one
+row for it. A file for which a stage emits zero rows — an all-silent
+file in VAD, a file with no accepted host match — is never recorded as
+done and is recomputed on every run.
 """
 
 from __future__ import annotations

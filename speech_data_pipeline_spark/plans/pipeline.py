@@ -9,12 +9,23 @@ keyed table per stage under ``workdir/{stage}``, each stage running
 only for keys absent from its table (plans/incremental.pending). Stage
 gating (run_vad/run_sep_filter/... flags, sh:10-14) maps to the
 ``stages`` argument.
+
+Decode once per call: the ``audio`` frame a caller passes is usually a
+lazy scan → decode plan, and every stage reads it several times (its
+pending check, each samples consumer, each key-only join). Spark cannot
+prune decode behind the pending anti-join, so the plan would re-decode
+every file on every read. ``run_pipeline`` therefore persists the frame,
+materializes it with one action before the first stage and unpersists
+it when the call returns or raises. The cache holds every file the
+caller passed, done ones included, for the length of one call; the
+returned stage tables are parquet reads and do not depend on it.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,9 +52,34 @@ def run_pipeline(
     stage functions (the analog of the reference's per-stage CLI flags,
     scripts/data_pipeline.sh:10-14), e.g.
     ``{"rematch": {"min_merged_duration": 0.0}}``.
+
+    ``audio`` is decoded once per call: it is persisted
+    (``MEMORY_AND_DISK``) and counted before the first stage, every
+    stage reads the cached copy, and it is unpersisted before the call
+    returns or raises. The returned tables are read back from parquet
+    and stay valid after the cache is gone. A frame the caller already
+    cached is used as is and left cached.
     """
+    owned = audio.storageLevel == StorageLevel.NONE
+    if owned:
+        audio = audio.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        audio.count()
+        return _run_stages(spark, audio, workdir, hosts, stages, stage_conf or {})
+    finally:
+        if owned:
+            audio.unpersist()
+
+
+def _run_stages(
+    spark: SparkSession,
+    audio: DataFrame,
+    workdir: str,
+    hosts: DataFrame | None,
+    stages: tuple[str, ...],
+    conf: dict[str, dict],
+) -> dict[str, DataFrame]:
     out: dict[str, DataFrame] = {}
-    conf = stage_conf or {}
 
     def path(stage: str) -> str:
         return os.path.join(workdir, stage)

@@ -41,7 +41,7 @@ def test_classify_silence_compat_double_append(spark):
 def test_run_pipeline_end_to_end_and_incremental(spark):
     from tests.test_pipeline import synth_audio, SR
 
-    tmp = tempfile.mkdtemp()
+    tmp, cold_tmp = tempfile.mkdtemp(), tempfile.mkdtemp()
     try:
         audio = synth_audio(spark)
         hosts = spark.createDataFrame(
@@ -58,5 +58,23 @@ def test_run_pipeline_end_to_end_and_incremental(spark):
         out2 = run_pipeline(spark, audio, tmp, hosts=hosts, stage_conf=conf)
         assert out2["vad"].count() == vad_n
         assert out2["diarization"].count() == out["diarization"].count()
+        # superset re-run: folding in one new file equals a cold run
+        extra = spark.createDataFrame(
+            [("f4", [0.3, -0.3] * SR + [0.0] * (2 * SR) + [0.5, -0.5] * SR, SR)],
+            ["audio_id", "samples", "sr"],
+        )
+        superset = audio.unionByName(extra)
+        out3 = run_pipeline(spark, superset, tmp, hosts=hosts, stage_conf=conf)
+        cold = run_pipeline(spark, superset, cold_tmp, hosts=hosts, stage_conf=conf)
+        assert out3["vad"].where("audio_id = 'f4'").count() > 0
+        for stage in out3:
+            assert table(out3[stage]) == table(cold[stage]), stage
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(cold_tmp, ignore_errors=True)
+
+
+def table(df):
+    """Order-insensitive, exact comparison key for a stage table."""
+    cols = sorted(df.columns)
+    return sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())

@@ -7,12 +7,15 @@ defaults) and checks a timestamp-sensitive query still matches its
 DuckDB oracle value-for-value."""
 
 import json
+import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 spark = (
@@ -47,7 +50,7 @@ print(json.dumps({"ok": True}))
 
 def test_driver_contract_on_plain_session():
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, REPO],
         capture_output=True,
         text=True,
         timeout=420,

@@ -124,7 +124,7 @@ def test_wavmeta_datasource(spark, tmp_path):
     across the requested partitions."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from test_multimodal import make_wav
 
     from speech_data_pipeline_spark.operators.multimodal import decode_wav_bytes
@@ -177,7 +177,7 @@ def test_wavmeta_stream_reader_incremental(spark, tmp_path):
     import sys
     import tempfile
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from test_multimodal import make_wav
 
     from speech_data_pipeline_spark.sources.wavmeta import register_wavmeta
